@@ -206,8 +206,8 @@ object Bench {
       .mkString("{", ",", "}")
     val detail =
       s"""{"metric":"total","value":$total,"unit":"sec","basis":"noop-materialize","queries":$detailQs,"rows":$detailRows,"runs":$detailRuns,"row_drift":$drifted,"harness_drift":$driftJson,"sf":"$sfDir"}"""
-    val out = new java.io.PrintWriter("BENCH_DETAIL.json")
-    try out.println(detail) finally out.close()
+    java.nio.file.Files.write(java.nio.file.Paths.get("BENCH_DETAIL.json"),
+      (detail + "\n").getBytes("UTF-8"))
     val sfName = new java.io.File(sfDir).getName // basename: every char counts
     // 176+ queries no longer fit one ~1800-char line even at 1-decimal
     // precision (round 7 died on exactly this require and lost its bench
@@ -263,9 +263,10 @@ object Bench {
     // build.sbt) and it was not the final stdout line ("[success] Total
     // time" trails it). The file is the recovery path that cannot be
     // damaged by any log framing. Additions only — what is timed and what
-    // is printed are unchanged.
-    val lineOut = new java.io.PrintWriter("BENCH_LINE.json")
-    try lineOut.println(line) finally lineOut.close()
+    // is printed are unchanged. Files.write throws on any I/O error (a
+    // PrintWriter swallows them), so a stale file never passes as current.
+    java.nio.file.Files.write(java.nio.file.Paths.get("BENCH_LINE.json"),
+      (line + "\n").getBytes("UTF-8"))
     println(line)
     spark.stop()
   }

@@ -486,17 +486,29 @@ object CorpusOps {
     * store manifest's recorded corpus LISTING FINGERPRINT compared to the
     * corpus's current one ([[graft.table.StoreManifest]]) — pure LIST
     * metadata, valid on object storage where mtimes carry no ordering
-    * contract; a store without a manifest is never trusted.
+    * contract; a store without a manifest is never trusted. `maxscore/`
+    * additionally must be stamped at least as new as `postings/` (the
+    * gate [[wandTopKBatchFrom]] shares): impacts computed before a later
+    * [[appendLexStore]] are not valid upper bounds, so every reader of
+    * them — vocabulary ranking and WAND bounds alike — falls back to the
+    * postings instead.
     */
   private def lexStored(spark: SparkSession, dir: String, part: String): Option[DataFrame] = {
     val store = lexStorePathFor(dir)
     val path = s"$store/$part"
     if (lexStoreEnabled && new java.io.File(s"$path/_SUCCESS").exists() &&
       graft.table.StoreManifest.corpusMatches(store,
-        graft.table.StoreManifest.corpusFingerprint(s"$dir/documents.parquet")))
+        graft.table.StoreManifest.corpusFingerprint(s"$dir/documents.parquet")) &&
+      (part != "maxscore" || maxScoresFresh(store)))
       Some(spark.read.parquet(path))
     else None
   }
+
+  /** The one trust gate for a store's `maxscore/` impact bounds: stamped
+    * at least as new as its `postings/`.
+    */
+  private def maxScoresFresh(store: String): Boolean =
+    graft.table.StoreManifest.partFresh(store, "maxscore", "postings")
 
   /** The corpus (doc_id, text) scan for the STORE-OFF tokenize fallbacks,
     * fanned out when (and only when) its physical split count is below the
@@ -1080,7 +1092,7 @@ object CorpusOps {
         .join(broadcast(qt.select(col("term")).distinct()), Seq("term"), "leftsemi")
     }
     val maxs =
-      if (graft.table.StoreManifest.partFresh(store, "maxscore", "postings"))
+      if (maxScoresFresh(store))
         Some {
           val m = spark.read.parquet(s"$store/maxscore")
           literalTerms match {

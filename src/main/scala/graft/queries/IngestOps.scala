@@ -969,7 +969,7 @@ object IngestOps {
     * ([[graft.table.VersionedTable]]): the base snapshot commits as
     * version 1, then three deterministic change batches merge as versions
     * 2–4, each a copy-on-write rewrite of only the key buckets the batch
-    * touches, published by an atomic put-if-absent manifest (stale
+    * touches, published by an atomic put-if-absent Delta commit (stale
     * writers are rejected — VersionedTableSpec proves the two-writer
     * race). The query then reads the table PINNED AT VERSION 3 — not
     * latest — so the returned rows must equal base + exactly the first
@@ -984,9 +984,9 @@ object IngestOps {
     * v3 = delete doc_id%9=0, upsert text+" v3" where doc_id%5=0;
     * v4 = upsert text+" v4" where doc_id%6=0 (must NOT appear).
     *
-    * Scale: manifests are version-sized text; each merge shuffles only
+    * Scale: commits are version-sized text; each merge shuffles only
     * changes + touched buckets (1% of keys touched ⇒ ~1% rewritten, the
-    * rest carries over by reference); time travel is manifest replay plus
+    * rest carries over by reference); time travel is log replay plus
     * a pruned parquet read — none of it is table-sized driver work.
     */
   /** The q192/q195/q196 fixture: ONE versioned table per (JVM, sf dir) —
@@ -1127,7 +1127,7 @@ object IngestOps {
     * This is how an incremental materialized view, a replica, or an audit
     * subscribes to a 100 TB table: read the delta, never rescan the table.
     *
-    * Scale: the diff is BUCKET-PRUNED from the manifests — a bucket no
+    * Scale: the diff is BUCKET-PRUNED from the log — a bucket no
     * commit in (2, 4] touched carries the same immutable files in both
     * snapshots and is never read, so cost tracks the touched data, and the
     * one full-outer join runs co-partitioned on the key over the two
@@ -1354,7 +1354,7 @@ object IngestOps {
     * breaks the hash.
     *
     * Scale: each commit rewrites only the buckets its users touch
-    * (copy-on-write merge); idempotence costs a manifest-header scan. This
+    * (copy-on-write merge); idempotence costs a txn-cursor log replay. This
     * is the CDC-consumer produce path: a bus feed of entity states lands
     * as a queryable, time-travelable keyed table with exactly-once
     * semantics end to end.
@@ -1415,7 +1415,7 @@ object IngestOps {
               .otherwise("upsert").as("op"),
             col("event_id"), col("event_type"), col("value"))
         t.mergeBatch(changes, bid)
-        // at-least-once redelivery: the committed batch tag makes this a
+        // at-least-once redelivery: the committed txn action makes this a
         // detected no-op — any re-apply would corrupt last-write-wins state
         t.mergeBatch(changes, bid)
         ()
@@ -1447,8 +1447,8 @@ object IngestOps {
     * append commits, a remove+add REPLACE commit, a parquet checkpoint +
     * `_last_checkpoint`, and a post-checkpoint tail commit — and the
     * query then ADOPTS it: `DeltaLog.read` replays checkpoint + JSON tail
-    * into the latest snapshot, `VersionedTable.init` lands it in the
-    * native substrate, and the output aggregates the adopted table. The
+    * into the latest snapshot, `VersionedTable.init` lands it as a keyed,
+    * bucket-partitioned table, and the output aggregates the adopted table. The
     * `v1_docs` audit column time-travels to the pre-replace version, so a
     * reader that ignored remove actions (or replayed the tail twice)
     * breaks the hash.
@@ -3544,7 +3544,7 @@ object IngestOps {
       |ORDER BY a.doc_id""".stripMargin
 
   /** q196 — TABLE MAINTENANCE is logically invisible: on its own copy of
-    * the q192 table, write a manifest CHECKPOINT (the Delta
+    * the q192 table, write a log CHECKPOINT (the Delta
     * `_last_checkpoint` move — replay cost bounded by checkpoint cadence,
     * not table lifetime) and then REBUCKET the table 16 → 4 as commit v5
     * (the copy-on-write granularity rewrite a table needs when its key
@@ -3594,14 +3594,14 @@ object IngestOps {
     * `foreachBatch` commits each batch into a [[graft.table.VersionedTable]]
     * via `appendBatch(df, batchId)` — then immediately DELIVERS THE SAME
     * BATCH AGAIN, simulating the at-least-once redelivery every sink must
-    * tolerate after a failure. The batch-id tag in the committed manifest
+    * tolerate after a failure. The batch id in the committed txn action
     * makes the duplicate a no-op (the Delta txn-version idiom), so the
     * table holds each event exactly once; the per-type aggregate over the
     * final snapshot hash-matches the oracle computed from the raw events
     * table — any double-append would double the counts and fail the gate.
     *
     * Scale: each commit is one bucket-partitioned parquet write (adds
-    * only, no rewrite); idempotence costs a manifest-header scan, never a
+    * only, no rewrite); idempotence costs a txn-cursor log replay, never a
     * data read. This is the produce path that turns a stream into the
     * q192/q195 commit log — sink, time travel, and CDC read compose.
     */
@@ -3629,7 +3629,7 @@ object IngestOps {
       .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], bid: Long) =>
         t.appendBatch(batch, bid)
         // at-least-once redelivery: same batch id arrives again — the
-        // committed manifest tag makes this a detected no-op
+        // committed txn action makes this a detected no-op
         t.appendBatch(batch, bid)
         ()
       }
@@ -3878,7 +3878,7 @@ object IngestOps {
     *
     * Scale: the pinned side is a bucket-pruned parquet read like any
     * other; at 100 TB it broadcasts if dimension-sized or bucket-joins if
-    * not — pinning costs nothing but the manifest lookup. This row closes
+    * not — pinning costs nothing but the log lookup. This row closes
     * the loop between the streaming family (q133's enrich) and the table
     * layer (q192's time travel): the same snapshot contract, composed.
     */
@@ -3979,7 +3979,7 @@ object IngestOps {
     * the source-table predicate the oracle recomputes independently.
     *
     * Scale: the erasure merge shuffles requests + touched buckets only;
-    * vacuum is manifest replay + file deletes, data-size-free. At 100 TB
+    * vacuum is log replay + file deletes, data-size-free. At 100 TB
     * this is the nightly compliance job: batched requests, one merge, one
     * vacuum past the retention window.
     */
@@ -4010,8 +4010,8 @@ object IngestOps {
     val reqPred = graft.functions.ColFns.h60(
       concat(col("c_custkey").cast("string"), lit(":gdpr"))) % Q214ReqMod === 0
     val t = q214Table(spark, dir)
-    // "v1 unreadable" is probed at the MANIFEST level: every data path
-    // v1's manifest declares live must be gone from disk. Exactly the
+    // "v1 unreadable" is probed at the LOG level: every data path
+    // v1's log snapshot declares live must be gone from disk. Exactly the
     // condition the former `t.read(1L).count()` try/catch detected
     // (PATH_NOT_FOUND), but without building a deliberately-failing Spark
     // plan — a failed analysis in an Observation-bearing session makes

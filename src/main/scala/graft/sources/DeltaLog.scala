@@ -22,21 +22,21 @@ import org.apache.spark.sql.types._
   *     to the newest checkpoint.
   *
   * The snapshot at version v is the adds of commits 0..v minus the
-  * removes (last action per path wins) — identical replay semantics to
-  * [[graft.table.VersionedTable]]'s native manifest log, which is what
-  * makes the two interoperable: INBOUND, `read(root, v)` materializes a
-  * snapshot another engine committed (SourcesSpec replays a hand-authored
-  * foreign log with multi-part checkpoints, remove-then-re-add across a
-  * checkpoint boundary, `dataChange=false` compaction commits, and
-  * stats/tags fields this writer never emits) and `VersionedTable.init`
-  * adopts it (q241 runs that loop against a table written by
-  * [[commitAppend]] / [[commitReplace]]); OUTBOUND, the writer publishes
-  * commits any Delta reader accepts — checkpoints carry the
-  * protocol/metaData actions and the full add schema PROTOCOL.md
-  * requires, and `_last_checkpoint` is published via write-temp +
-  * ATOMIC_MOVE so a reader never observes a torn pointer — with the same
-  * atomic put-if-absent race on the commit file that object-store Delta
-  * writers use.
+  * removes (last action per path wins). This is graft's ONE table log:
+  * [[graft.table.VersionedTable]] is a keyed layer over it (its commits
+  * are [[commitAppendPartitioned]] / [[commitReplace]] /
+  * [[commitAppendIdempotent]] calls, so every versioned table is a Delta
+  * table partitioned by its key bucket). INBOUND, `read(root, v)`
+  * materializes a snapshot another engine committed (SourcesSpec replays
+  * a hand-authored foreign log with multi-part checkpoints,
+  * remove-then-re-add across a checkpoint boundary, `dataChange=false`
+  * compaction commits, and stats/tags fields this writer never emits);
+  * OUTBOUND, the writer publishes commits any Delta reader accepts —
+  * checkpoints carry the protocol/metaData actions and the full add
+  * schema PROTOCOL.md requires, and `_last_checkpoint` is published via
+  * write-temp + ATOMIC_MOVE so a reader never observes a torn pointer —
+  * with the same atomic put-if-absent race on the commit file that
+  * object-store Delta writers use.
   *
   * Scale: log replay is driver-side string work sized by versions since
   * the last checkpoint (never data-sized); the checkpoint read is one
@@ -1407,7 +1407,8 @@ object DeltaLog {
     catch {
       case _: org.apache.hadoop.fs.FileAlreadyExistsException =>
         throw new java.util.ConcurrentModificationException(
-          s"DeltaLog $root: version $v was committed concurrently")
+          s"DeltaLog $root: cannot commit version $v — a concurrent writer " +
+            "already committed it; re-read the table and retry")
     }
   }
 
@@ -1647,11 +1648,8 @@ object DeltaLog {
       throw new IllegalArgumentException(s"no metaData action in Delta log at $root"))
     val node = mapper.readTree(metaJson)
       .asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
-    val conf = Option(node.get("configuration"))
-      .collect { case o: com.fasterxml.jackson.databind.node.ObjectNode => o }
-      .getOrElse(node.putObject("configuration"))
+    val conf = configurationOf(node)
     props.foreach { case (k, v) => conf.put(k, v) }
-    node.set[com.fasterxml.jackson.databind.JsonNode]("configuration", conf)
     val protoUpgrade: Seq[String] =
       if (props.get("delta.enableChangeDataFeed").contains("true")) {
         val cur = latestProtocolJson(root).map(mapper.readTree)
@@ -1681,6 +1679,49 @@ object DeltaLog {
     publish(root, next, protoUpgrade :+ s"""{"metaData":${node.toString}}""")
     next
   }
+
+  /** A metaData node's mutable `configuration` object, created if absent. */
+  private def configurationOf(meta: com.fasterxml.jackson.databind.node.ObjectNode)
+      : com.fasterxml.jackson.databind.node.ObjectNode =
+    Option(meta.get("configuration"))
+      .collect { case o: com.fasterxml.jackson.databind.node.ObjectNode => o }
+      .getOrElse(meta.putObject("configuration"))
+
+  /** `header` with `props` merged into the table configuration, inside
+    * the SAME commit: folded into the commit's own metaData action when it
+    * carries one (table creation, schema evolution), else the latest
+    * metaData re-published — and only when `props` change a value, so a
+    * writer that re-declares its settings on every commit adds nothing.
+    */
+  private def withTableProperties(root: String, header: Seq[String],
+      props: Map[String, String]): Seq[String] = {
+    if (props.isEmpty) return header
+    val (own, rest) = header.partition(_.startsWith("""{"metaData""""))
+    val metaJson = own.headOption.map(a => mapper.readTree(a).get("metaData").toString)
+      .orElse(latestMetaDataJson(root))
+      .getOrElse(throw new IllegalArgumentException(
+        s"no metaData action in Delta log at $root"))
+    val node = mapper.readTree(metaJson)
+      .asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
+    val conf = configurationOf(node)
+    if (own.isEmpty && props.forall { case (k, v) =>
+        Option(conf.get(k)).exists(_.asText() == v) })
+      header
+    else {
+      props.foreach { case (k, v) => conf.put(k, v) }
+      rest :+ s"""{"metaData":${node.toString}}"""
+    }
+  }
+
+  /** The metaData configuration (table properties) in force at `version`
+    * — driver-side log replay.
+    */
+  private[graft] def tableProperties(spark: SparkSession, root: String,
+      version: Long): Map[String, String] =
+    replay(spark, root, Some(version)).metaDataJson.map(mapper.readTree)
+      .flatMap(m => Option(m.get("configuration")))
+      .map(_.fields().asScala.map(e => e.getKey -> e.getValue.asText()).toMap)
+      .getOrElse(Map.empty)
 
   /** RENAME a column on a COLUMN-MAPPED table — a metaData-ONLY commit
     * rewriting the field's LOGICAL name while `physicalName` and the
@@ -2200,11 +2241,7 @@ object DeltaLog {
         val node = mapper.readTree(metaJson.get)
           .asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
         node.put("schemaString", evolved.json)
-        val confNode = Option(node.get("configuration"))
-          .collect { case o: com.fasterxml.jackson.databind.node.ObjectNode => o }
-          .getOrElse(node.putObject("configuration"))
-        confNode.put("delta.columnMapping.maxColumnId", cursor.toString)
-        node.set[com.fasterxml.jackson.databind.JsonNode]("configuration", confNode)
+        configurationOf(node).put("delta.columnMapping.maxColumnId", cursor.toString)
         (Seq(s"""{"metaData":${node.toString}}"""), evolved)
       }
     }
@@ -2278,11 +2315,23 @@ object DeltaLog {
     * would). On an EXISTING table the layout always comes from the log's
     * own metaData — a mismatched `createPartitionBy` is refused loudly
     * rather than silently splitting the table across two layouts.
+    * `tableProperties` merge into the metaData configuration in the same
+    * commit ([[withTableProperties]]).
     */
   def commitAppendPartitioned(root: String, df: DataFrame,
       createPartitionBy: Seq[String],
-      expectedVersion: Option[Long] = None): Long = {
-    val next = expectedVersion.getOrElse(currentVersion(root)) + 1
+      expectedVersion: Option[Long] = None,
+      tableProperties: Map[String, String] = Map.empty): Long =
+    appendCommit(root, df, createPartitionBy,
+      expectedVersion.getOrElse(currentVersion(root)), Seq.empty, tableProperties)
+
+  /** The one append commit: `df`'s files as version `base + 1`, with
+    * `extra` actions (a txn) riding between the header and the adds.
+    */
+  private def appendCommit(root: String, df: DataFrame,
+      createPartitionBy: Seq[String], base: Long, extra: Seq[String],
+      props: Map[String, String]): Long = {
+    val next = base + 1
     val (header, wls) =
       if (next == 0L) (headerActions(df, createPartitionBy), df.schema)
       else {
@@ -2304,11 +2353,14 @@ object DeltaLog {
       if (next == 0L) (df, partCols) else toWriteLayout(root, df, wls)
     val adds = writeDataFiles(root, next, wdf, wPartCols)
     publish(root, next,
-      header ++ adds.map(w =>
+      withTableProperties(root, header, props) ++ extra ++ adds.map(w =>
         addAction(w.path, w.size, partitionValues = w.partitionValues,
           stats = w.stats)))
     next
   }
+
+  private def txnAction(appId: String, version: Long): String =
+    s"""{"txn":{"appId":${jstr(appId)},"version":$version,"lastUpdated":0}}"""
 
   /** The latest committed SetTransaction version for `appId`, or None if
     * the app never committed — the read half of the txn idempotence
@@ -2323,46 +2375,40 @@ object DeltaLog {
     * (PROTOCOL.md SetTransaction; delta-spark's `txnAppId`/`txnVersion`
     * options): the commit carries a `txn {appId, version}` action, and a
     * re-delivered batch whose version is ≤ the app's recorded cursor is
-    * a DETECTED NO-OP (returns the current table version, writes
-    * nothing). At-least-once delivery + this check = exactly-once table
-    * contents — the same contract [[graft.table.VersionedTable
-    * .appendBatch]] implements on the native substrate, here in the wire
-    * format any Delta reader/writer shares. The check and the publish
-    * race safely: the commit lands via put-if-absent at the version the
-    * cursor was read at, so a concurrent writer advancing the log forces
+    * a DETECTED NO-OP (returns the base version, writes nothing).
+    * At-least-once delivery + this check = exactly-once table contents
+    * ([[graft.table.VersionedTable.appendBatch]] is this verb on a keyed
+    * table). The check and the publish race safely: the commit lands via
+    * put-if-absent at `expectedVersion + 1` (None = latest right now), so
+    * a concurrent writer advancing the log forces
     * ConcurrentModificationException and the retry re-reads the cursor.
+    * `createPartitionBy` / `tableProperties` as in
+    * [[commitAppendPartitioned]].
     */
   def commitAppendIdempotent(spark: SparkSession, root: String,
-      df: DataFrame, appId: String, version: Long): Long = {
-    val base = currentVersion(root)
+      df: DataFrame, appId: String, version: Long,
+      createPartitionBy: Seq[String] = Seq.empty,
+      tableProperties: Map[String, String] = Map.empty,
+      expectedVersion: Option[Long] = None): Long = {
+    val base = expectedVersion.getOrElse(currentVersion(root))
     val already = base >= 0 &&
       replay(spark, root, Some(base)).txns.get(appId).exists(_ >= version)
-    if (already) return base
-    val next = base + 1
-    val (header, wls) =
-      if (next == 0L) (headerActions(df, Seq.empty), df.schema)
-      else {
-        val (h, s) = evolutionFor(root, df)
-        (ntzProtocolActions(root, s) ++ h, s)
-      }
-    val (wdf, wPartCols) =
-      if (next == 0L) (df, Seq.empty[String]) else toWriteLayout(root, df, wls)
-    val adds = writeDataFiles(root, next, wdf, wPartCols)
-    publish(root, next,
-      header ++
-        Seq(s"""{"txn":{"appId":${jstr(appId)},"version":$version,"lastUpdated":0}}""") ++
-        adds.map(w => addAction(w.path, w.size,
-          partitionValues = w.partitionValues, stats = w.stats)))
-    next
+    if (already) base
+    else appendCommit(root, df, createPartitionBy, base,
+      Seq(txnAction(appId, version)), tableProperties)
   }
 
   /** Remove `removePaths` (relative) and append `addDf`'s files in ONE
     * commit — the rewrite shape (compaction, copy-on-write update) every
-    * Delta writer publishes. Returns the committed version.
+    * Delta writer publishes. `tableProperties` merge into the metaData
+    * configuration and `txn` (appId, version) records a SetTransaction,
+    * both in the same commit. Returns the committed version.
     */
   def commitReplace(root: String,
       removePaths: Seq[String], addDf: DataFrame,
-      expectedVersion: Option[Long] = None): Long = {
+      expectedVersion: Option[Long] = None,
+      tableProperties: Map[String, String] = Map.empty,
+      txn: Option[(String, Long)] = None): Long = {
     val base = expectedVersion.getOrElse(currentVersion(root))
     val next = base + 1
     // resolve each removed path's LIVE incarnation so the remove carries
@@ -2372,11 +2418,12 @@ object DeltaLog {
       replay(addDf.sparkSession, root, Some(base)).adds
         .map(a => a.path -> a.dv).toMap
     val (header0, wls) = evolutionFor(root, addDf)
-    val header = ntzProtocolActions(root, wls) ++ header0
+    val header = withTableProperties(root,
+      ntzProtocolActions(root, wls) ++ header0, tableProperties)
     val (wdf, wPartCols) = toWriteLayout(root, addDf, wls)
     val adds = writeDataFiles(root, next, wdf, wPartCols)
     publish(root, next,
-      header ++
+      header ++ txn.map { case (app, v) => txnAction(app, v) } ++
         removePaths.map(p => removeAction(p, dv = liveDv.getOrElse(p, None))) ++
         adds.map(w =>
           addAction(w.path, w.size, partitionValues = w.partitionValues,
@@ -3091,7 +3138,8 @@ object DeltaLog {
     * `retainFromVersion` — the storage-reclaim half of [[commitOptimize]]
     * (an OPTIMIZE tombstones the old files; vacuum is what actually frees
     * the bytes, after which time travel BEFORE the retain horizon is
-    * gone). Returns the deleted relative paths. The log itself is never
+    * gone) — plus the commit directories of writers that lost a publish
+    * race. Returns the deleted relative paths. The log itself is never
     * touched — a post-vacuum replay of an old version fails at read time,
     * exactly like Delta after `VACUUM ... RETAIN`.
     */
@@ -3144,8 +3192,24 @@ object DeltaLog {
       }).flatMap(dvFileOf).distinct
     val doomed = all.filterNot(keep) ++ allDv.filterNot(keepDv)
     doomed.foreach(p => Fs.delete(Fs.resolve(root, p)))
-    doomed
+    // ORPHANED COMMIT DIRECTORIES: a writer stages its files under
+    // `c<version>-<uuid>/` before the put-if-absent publish, so the loser
+    // of that race leaves a directory no log action references. Only
+    // directories of versions already committed are swept — one for a
+    // later version may belong to a writer still in flight.
+    val referenced = (all ++ tailActions.flatMap(n =>
+      Option(n.get("remove")).map(_.get("path").asText())))
+      .map(_.takeWhile(_ != '/')).toSet
+    val orphans = Fs.list(root).map(Fs.name).filter {
+      case d @ CommitDirName(dv) => dv.toLong <= cur && !referenced(d)
+      case _ => false
+    }
+    orphans.foreach(d => Fs.deleteRecursive(Fs.resolve(root, d)))
+    doomed ++ orphans
   }
+
+  /** A top-level data directory [[writeDataFiles]] stages one commit in. */
+  private val CommitDirName = """c(\d+)-[0-9a-f]{8}""".r
 
   /** The checkpoint parquet schema PROTOCOL.md prescribes: one action per
     * row, exactly one of the struct columns non-null. Minimal but

@@ -31,8 +31,8 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * scale-layer generalization (SURVEY §2b streaming): offsets replace line
   * numbers as the replay cursor, and the exactly-once contract moves to
   * the sink — [[sinkToVersionedTable]] writes each micro-batch through
-  * [[graft.table.VersionedTable.appendBatch]], whose batch-id manifest tag
-  * makes redelivery a detected no-op (the q200 path), so ANY of the three
+  * [[graft.table.VersionedTable.appendBatch]], whose batch id rides in the
+  * commit as a Delta txn action and makes redelivery a detected no-op (the q200 path), so ANY of the three
   * sources composes with at-least-once delivery into exactly-once tables.
   */
 object EventBus {
@@ -143,7 +143,7 @@ object EventBus {
       .outputMode("append")
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], bid: Long) =>
-        // appendBatch tags the manifest with the batch id, so an
+        // appendBatch commits the batch id as a txn action, so an
         // at-least-once upstream (bus redelivery, retried foreachBatch,
         // restarted query) commits each batch once — the duplicate call is
         // a detected no-op (VersionedTableSpec + the StreamingSpec E2E's

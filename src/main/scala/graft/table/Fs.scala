@@ -163,11 +163,25 @@ object Fs {
     if (!fs.exists(p)) return Seq.empty
     if (fs.getFileStatus(p).isFile)
       return Seq((fs.makeQualified(p).toString, fs.getFileStatus(p).getLen))
-    val it = fs.listFiles(p, true)
     val out = Seq.newBuilder[(String, Long)]
-    while (it.hasNext) {
-      val st = it.next()
-      if (st.isFile) out += ((st.getPath.toString, st.getLen))
+    fs match {
+      case _: org.apache.hadoop.fs.RawLocalFileSystem =>
+        // a depth-first listStatus walk, the same order listFiles yields:
+        // listFiles' LocatedFileStatus copies each file's permissions,
+        // which the local FS loads by forking one `ls` per file — ~150 ms
+        // for one 16-bucket commit directory against ~2 ms for the walk
+        def walk(d: HPath): Unit = fs.listStatus(d).foreach { st =>
+          if (st.isDirectory) walk(st.getPath)
+          else out += ((st.getPath.toString, st.getLen))
+        }
+        walk(p)
+      case _ =>
+        // object stores serve the recursive listing as one flat LIST
+        val it = fs.listFiles(p, true)
+        while (it.hasNext) {
+          val st = it.next()
+          if (st.isFile) out += ((st.getPath.toString, st.getLen))
+        }
     }
     out.result()
   }

@@ -3,83 +3,80 @@ package graft.table
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** TRANSACTIONAL VERSIONED TABLE — a lakehouse-style commit log over
-  * immutable parquet data files, generalizing the `_version`
-  * optimistic-lock idiom of [[graft.ingest.BatchRunStore]] (the
-  * reference's per-run conditional write, `lib/batchProcessing.js:288,548`)
-  * from ONE run row to a WHOLE table:
+import graft.sources.DeltaLog
+
+/** TRANSACTIONAL VERSIONED TABLE — a keyed table over graft's one table
+  * log ([[DeltaLog]]), generalizing the `_version` optimistic-lock idiom
+  * of [[graft.ingest.BatchRunStore]] (the reference's per-run conditional
+  * write, `lib/batchProcessing.js:288,548`) from ONE run row to a WHOLE
+  * table:
   *
-  *   - every commit produces version v+1 and a manifest listing the data
-  *     files it adds and removes; data files themselves are immutable;
+  *   - every commit produces version v+1, adding and removing immutable
+  *     data files;
   *   - reads PIN a version: `read(k)` reconstructs the exact snapshot any
   *     reader at version k saw, forever (time travel);
   *   - a writer must present the version it based its work on; if another
   *     writer committed first, publication fails LOUDLY instead of
   *     clobbering (optimistic concurrency, detected at the commit point).
   *
-  * == Storage layout ==
+  * == Storage: a Delta table partitioned by key bucket ==
   * {{{
-  *   <root>/_log/v<NNNNNNNN>.manifest   — one tiny text file per version
-  *   <root>/data/c<N>/b=<bucket>/part-....parquet — files of commit N
+  *   <root>/_delta_log/%020d.json                  — one commit per version
+  *   <root>/c<N>-<uuid>/b=<bucket>/part-....parquet — files of commit N
   * }}}
-  * A manifest line is `add <bucket> <relative-path>` or `remove
-  * <relative-path>`; the live file set at version k is the adds of
-  * versions 1..k minus the removes of versions 1..k. Manifests are
-  * VERSION-SIZED (a few lines), never data-sized — listing the live set
-  * for any version is driver-side string work, exactly like Delta/Iceberg
-  * log replay.
+  * Table version v is Delta version v − 1 (version 0 means "no table
+  * yet"); the bucket count is the metaData configuration entry
+  * [[VersionedTable.BucketsKey]], written by the commit that creates or
+  * rebuckets the table. Every log operation is a [[DeltaLog]] verb —
+  * put-if-absent commits, checkpointed replay, txn-idempotent appends,
+  * vacuum — so any Delta reader sees the table (with the `b` column) and
+  * this class owns only the keyed algorithms on top: the bucket-pruned
+  * copy-on-write merge, the bucket-pruned diff, per-bucket compaction,
+  * rebucketing and schema enforcement.
   *
   * == Commit protocol (put-if-absent) ==
-  * Data files are written FIRST, under a directory only this commit uses
-  * (`data/c<N>/`); the commit becomes visible only when
-  * `_log/v<N>.manifest` is published with an atomic create-no-overwrite
-  * through [[Fs]] (HDFS namenode create; an object store's if-none-match
-  * put; `CREATE_NEW` on the local FS). Two writers who both read version
-  * v and both try to publish v+1 race on that create: exactly one wins,
-  * the loser gets [[java.util.ConcurrentModificationException]] and its
-  * orphaned data directory is invisible to every reader (GC'd out of
-  * band, as in any lakehouse). The conflict check is therefore not a lock
-  * around the merge work — both writers do their copy-on-write in
-  * parallel — but a single atomic point at publication, which is what
-  * lets a 1000-executor merge run lock-free.
+  * Two writers who both read version v race on publishing v+1: exactly
+  * one wins, the loser gets [[java.util.ConcurrentModificationException]]
+  * and its orphaned data directory is invisible to every reader
+  * (reclaimed by [[vacuum]]). The conflict check is not a lock around the
+  * merge work — both writers do their copy-on-write in parallel — but a
+  * single atomic point at publication, which is what lets a 1000-executor
+  * merge run lock-free.
   *
   * == Copy-on-write merge, bucket-pruned ==
-  * Rows hash into [[nBuckets]] buckets by key (`pmod(key, nBuckets)`), and
+  * Rows hash into `nBuckets` buckets by key (`pmod(key, nBuckets)`), and
   * each commit's files are bucket-pure (written `partitionBy` bucket). A
   * merge therefore rewrites ONLY the buckets its change batch touches:
   * the touched-bucket set is collected from the (tiny, aggregated)
-  * changes frame, untouched files carry over by reference in the
-  * manifest, and the rewrite reads + full-outer-joins just the touched
-  * fraction. At 100 TB with a 4096-bucket table, a change batch touching
-  * 1% of keys rewrites ~1% of the data and moves zero bytes for the rest
-  * — manifest lines, not file copies. The join itself co-partitions both
-  * sides on the key, and because each side is already bucket-pruned the
-  * shuffle is change-sized + touched-snapshot-sized, never table-sized.
+  * changes frame, untouched files carry over by reference in the log,
+  * and the rewrite reads + full-outer-joins just the touched fraction. At
+  * 100 TB with a 4096-bucket table, a change batch touching 1% of keys
+  * rewrites ~1% of the data and moves zero bytes for the rest — log
+  * actions, not file copies. The join itself co-partitions both sides on
+  * the key, and because each side is already bucket-pruned the shuffle
+  * is change-sized + touched-snapshot-sized, never table-sized.
   *
   * Within-batch semantics match q134's CDC contract: `delete` wins over
   * `upsert` for the same key; an upsert REPLACES the whole payload row;
   * deletes of absent keys are no-ops.
   *
-  * == Interop / migration (Delta- and Iceberg-shaped tables) ==
-  * The format boundary is two feeds, both already public API — no foreign
-  * log format is ever parsed. OUTBOUND, a table another engine owns
-  * (Delta, Iceberg, a warehouse) is kept in sync by bootstrapping it from
-  * ONE pinned snapshot (`read(v)`) and thereafter applying
-  * `changes(v, latest)`: the typed insert/update/delete rows map 1:1 onto
-  * `MERGE INTO … WHEN MATCHED [AND change_type='delete'] THEN DELETE /
-  * UPDATE / WHEN NOT MATCHED THEN INSERT`, so each sync costs
-  * changes-sized work, never a table rescan —
+  * == Interop / migration ==
+  * OUTBOUND, a table another engine owns (Delta, Iceberg, a warehouse) is
+  * kept in sync by bootstrapping it from ONE pinned snapshot (`read(v)`)
+  * and thereafter applying `changes(v, latest)`: the typed
+  * insert/update/delete rows map 1:1 onto `MERGE INTO … WHEN MATCHED [AND
+  * change_type='delete'] THEN DELETE / UPDATE / WHEN NOT MATCHED THEN
+  * INSERT`, so each sync costs changes-sized work, never a table rescan —
   * [[graft.queries.IngestOps.q236CdcMirror]] runs that exact loop against
   * a plain-parquet stand-in mirror and hash-proves the replica equals the
   * native snapshot. INBOUND, an existing external table is adopted by
   * `init(snapshotDf)` and kept current by feeding its change stream
   * (Delta CDF / Iceberg changelog rows are already the `(key, op,
-  * payload)` shape) through `merge`. Snapshots and change feeds are the
-  * lingua franca; the commit log stays an implementation detail on both
-  * sides of the boundary.
+  * payload)` shape) through `merge`.
   *
   * @param keyCol  the table's primary-key column (must be LongType)
-  * @param nBuckets number of key buckets — the copy-on-write granularity
+  * @param nBuckets number of key buckets at creation — the copy-on-write
+  *                 granularity
   */
 final class VersionedTable(
     spark: SparkSession,
@@ -87,86 +84,43 @@ final class VersionedTable(
     keyCol: String,
     nBuckets: Int = 16) {
 
-  private val logDir = Fs.resolve(root, "_log")
-  private def manifestPath(v: Long) =
-    Fs.resolve(logDir, f"v$v%08d.manifest")
-  private def checkpointPath(v: Long) =
-    Fs.resolve(logDir, f"v$v%08d.checkpoint")
-
-  private def listLog(suffix: String): Seq[Long] =
-    Fs.list(logDir).map(Fs.name)
-      .collect { case s if s.startsWith("v") && s.endsWith(suffix) =>
-        s.stripPrefix("v").stripSuffix(suffix).toLong
-      }
+  import VersionedTable.{BatchAppId, BucketsKey}
 
   /** Highest committed version, 0 if the table doesn't exist yet. */
-  def currentVersion(): Long = {
-    val vs = listLog(".manifest")
-    if (vs.isEmpty) 0L else vs.max
-  }
+  def currentVersion(): Long = DeltaLog.currentVersion(root) + 1
 
-  /** Live (bucket, relative-path) pairs as of version `v`: replay the
-    * manifests from the newest CHECKPOINT at or below `v` (the Delta
-    * `_last_checkpoint` move — replay work is bounded by the checkpoint
-    * cadence, not the table's lifetime version count). Driver-side string
-    * work, never data-sized.
+  /** Live (bucket, relative-path) data files as of version `v` — Delta
+    * log replay, driver-side and never data-sized.
     */
   private def liveFiles(v: Long): Seq[(Int, String)] = {
     require(v >= 1 && v <= currentVersion(),
       s"version $v out of range [1, ${currentVersion()}]")
-    val live = scala.collection.mutable.LinkedHashMap.empty[String, Int]
-    val ckpt = listLog(".checkpoint").filter(_ <= v).sorted.lastOption
-    ckpt.foreach { c =>
-      Fs.readLines(checkpointPath(c)).foreach { line =>
-        line.split(" ", 3) match {
-          case Array("add", b, p) => live(p) = b.toInt
-          case _ =>
-        }
-      }
-    }
-    (ckpt.getOrElse(0L) + 1L to v).foreach { i =>
-      Fs.readLines(manifestPath(i)).foreach { line =>
-        line.split(" ", 3) match {
-          case Array("add", b, p) => live(p) = b.toInt
-          case Array("remove", p) => live.remove(p)
-          case _ => // blank / header line
-        }
-      }
-    }
-    live.toSeq.map { case (p, b) => (b, p) }
+    DeltaLog.snapshotFileEntries(spark, root, v - 1)
+      .map { case (p, pv, _) => (pv("b").toInt, p) }
   }
 
-  /** Persist the live set at the current version as a checkpoint file, so
-    * future reads replay from here instead of from version 1. Idempotent;
-    * older manifests stay on disk, so pre-checkpoint time travel still
-    * works (the checkpoint is a replay SHORTCUT, not a history truncation).
+  /** Persist the live set at the current version as a Delta checkpoint,
+    * so future reads replay from here instead of from version 1. Older
+    * commits stay on disk, so pre-checkpoint time travel still works (the
+    * checkpoint is a replay SHORTCUT, not a history truncation).
     */
   def checkpoint(): Long = {
-    val v = currentVersion()
-    require(v >= 1, s"table $root has no commits to checkpoint")
-    val lines = liveFiles(v).map { case (b, p) => s"add $b $p" }
-    val body = (s"checkpoint $v" +: lines).mkString("", "\n", "\n")
-    if (!Fs.exists(checkpointPath(v)))
-      try Fs.createNew(checkpointPath(v), body.getBytes("UTF-8"))
-      catch {
-        // a concurrent checkpointer beat us — the content is identical
-        case _: org.apache.hadoop.fs.FileAlreadyExistsException => ()
-      }
-    v
+    require(currentVersion() >= 1, s"table $root has no commits to checkpoint")
+    DeltaLog.checkpoint(spark, root) + 1
   }
 
-  /** Live data-directory entries per bucket at version `v` — the
-    * fragmentation metric [[compact]] acts on (each append/merge leaves
-    * one bucket-pure directory per touched bucket per commit).
+  /** Live data files per bucket at version `v` — the fragmentation
+    * metric [[compact]] acts on (each append/merge leaves one bucket-pure
+    * file per touched bucket per commit).
     */
   def bucketFileCounts(v: Long): Map[Int, Int] =
     liveFiles(v).groupBy(_._1).map { case (b, fs) => b -> fs.size }
 
   /** OPTIMIZE / small-file compaction — the third maintenance verb beside
-    * [[checkpoint]] (manifest-replay cost) and [[rebucket]] (granularity):
+    * [[checkpoint]] (log-replay cost) and [[rebucket]] (granularity):
     * every bucket whose live set holds more than `maxPerBucket` data
-    * directories is rewritten into one, published as a CONTENT-IDENTICAL
-    * commit (the add/remove lines move bytes, nothing else — q196's
+    * files is rewritten into one, published as a CONTENT-IDENTICAL
+    * commit (the removes and adds move bytes, nothing else — q196's
     * maintenance contract). Bucket-pruned like merge: only fragmented
     * buckets are read or rewritten, so compacting after K small streaming
     * appends costs the fragmented fraction of the table, not the table.
@@ -185,29 +139,23 @@ final class VersionedTable(
       case (b, fs) if fs.size > maxPerBucket => b
     }.toSet
     if (frag.isEmpty) return expectedVersion
-    val next = expectedVersion + 1
-    val nB = bucketCountAt(expectedVersion)
-    val paths = live.collect { case (b, p) if frag(b) => s"$root/$p" }
-    val adds = writeDataFiles(spark.read.parquet(paths: _*), next, nB)
-    publish(next, expectedVersion,
-      live.collect { case (b, p) if frag(b) => s"remove $p" } ++
-        adds.map { case (b, p) => s"add $b $p" },
-      s" buckets $nB")
-    next
+    val old = live.filter { case (b, _) => frag(b) }
+    commit(old, spark.read.parquet(old.map { case (_, p) => s"$root/$p" }: _*),
+      expectedVersion, bucketCountAt(expectedVersion))
   }
 
-  /** Absolute data paths version `v` reads — the manifest-level view a
-    * caller can existence-probe WITHOUT building a Spark plan (q214's
-    * erasure audit: a deliberately-failing `read(v).count()` probe made
-    * Spark's ObservationManager listener re-raise the analysis failure
-    * into the log of every later observed query in the session).
+  /** Absolute data paths version `v` reads — the log-level view a caller
+    * can existence-probe WITHOUT building a Spark plan (q214's erasure
+    * audit: a deliberately-failing `read(v).count()` probe made Spark's
+    * ObservationManager listener re-raise the analysis failure into the
+    * log of every later observed query in the session).
     */
   private[graft] def liveFilePaths(v: Long): Seq[String] =
     liveFiles(v).map { case (_, p) => s"$root/$p" }
 
   /** The snapshot exactly as version `v` committed it — time travel. */
   def read(v: Long): DataFrame = {
-    val paths = liveFiles(v).map { case (_, p) => s"$root/$p" }
+    val paths = liveFilePaths(v)
     if (paths.isEmpty)
       spark.emptyDataFrame
     else spark.read.parquet(paths: _*)
@@ -219,76 +167,36 @@ final class VersionedTable(
   private def bucketOf(c: org.apache.spark.sql.Column, n: Int) =
     pmod(c, lit(n)).cast("int")
 
-  /** The manifest header is `version v basedOn b [buckets n]
-    * [app id] [batch id]`; parse one named token's value, None if absent.
-    */
-  private def headerToken(v: Long, token: String): Option[Long] =
-    headerTokenStr(v, token).map(_.toLong)
-
-  private def headerTokenStr(v: Long, token: String): Option[String] = {
-    val header = Fs.readLines(manifestPath(v)).head
-    val parts = header.split(" ")
-    parts.indexOf(token) match {
-      case -1 => None
-      case i if i + 1 < parts.length => Some(parts(i + 1))
-      case _ => None
-    }
-  }
-
-  /** Bucket count in force at version `v` — the most recent commit that
-    * declared one (init and rebucket do; appends/merges inherit). Falls
-    * back to the constructor default for logs that predate the token.
+  /** Bucket count in force at version `v` — the metaData configuration
+    * entry init and rebucket write; falls back to the constructor default.
     */
   private def bucketCountAt(v: Long): Int =
-    (v to 1L by -1L).iterator
-      .flatMap(i => headerToken(i, "buckets"))
-      .nextOption().map(_.toInt).getOrElse(nBuckets)
+    DeltaLog.tableProperties(spark, root, v - 1).get(BucketsKey)
+      .map(_.toInt).getOrElse(nBuckets)
 
-  /** Write `df` (key + payload columns) as this commit ATTEMPT's data
-    * files — the directory is unique per attempt (not per version), so two
-    * racing writers both write freely and only the manifest publish
-    * decides; the loser's directory is never referenced by any manifest.
-    * One bucket-pure subdirectory per touched bucket; returns the adds.
+  /** `df` (key + payload columns) with its bucket column `b`, one shuffle
+    * co-locating each bucket's rows so every commit writes one bucket-pure
+    * file per touched bucket.
     */
-  private def writeDataFiles(df: DataFrame, n: Long, nB: Int): Seq[(Int, String)] = {
-    val dataDir =
-      s"data/c$n-${java.util.UUID.randomUUID().toString.take(8)}"
-    df.withColumn("b", bucketOf(col(keyCol), nB))
-      .repartition(col("b")) // one shuffle: co-locate each bucket's rows
-      .write.partitionBy("b").parquet(s"$root/$dataDir")
-    Fs.list(s"$root/$dataDir").map(Fs.name)
-      .filter(_.startsWith("b="))
-      .map(nm => (nm.stripPrefix("b=").toInt, s"$dataDir/$nm"))
-      .sortBy(_._1)
-  }
+  private def bucketed(df: DataFrame, nB: Int): DataFrame =
+    df.withColumn("b", bucketOf(col(keyCol), nB)).repartition(col("b"))
 
-  /** Publish manifest `v` atomically; throws
-    * [[java.util.ConcurrentModificationException]] if another writer
-    * already published it (the put-if-absent race — the loser's data dir
-    * stays invisible).
+  /** Commit `rows` as version `expectedVersion + 1`, replacing the
+    * `removes` files, under bucket count `nB`; `batchId` rides as the
+    * commit's txn action. Throws ConcurrentModificationException if a
+    * concurrent writer committed first.
     */
-  private def publish(v: Long, basedOn: Long, lines: Seq[String],
-      extraHeader: String = ""): Unit = {
-    Fs.mkdirs(logDir)
-    val body = (s"version $v basedOn $basedOn$extraHeader" +: lines)
-      .mkString("", "\n", "\n")
-    try Fs.createNew(manifestPath(v), body.getBytes("UTF-8"))
-    catch {
-      case _: org.apache.hadoop.fs.FileAlreadyExistsException =>
-        throw new java.util.ConcurrentModificationException(
-          s"VersionedTable $root: cannot commit version $v based on " +
-            s"$basedOn — a concurrent writer already committed $v; " +
-            "re-read the table and retry the merge")
-    }
-  }
+  private def commit(removes: Seq[(Int, String)], rows: DataFrame,
+      expectedVersion: Long, nB: Int, batchId: Option[Long] = None): Long =
+    DeltaLog.commitReplace(root, removes.map(_._2), bucketed(rows, nB),
+      Some(expectedVersion - 1), Map(BucketsKey -> nB.toString),
+      batchId.map(BatchAppId -> _)) + 1
 
   /** Create the table at version 1 from a full snapshot. */
   def init(df: DataFrame): Long = {
     require(currentVersion() == 0L, s"table $root already exists")
-    val adds = writeDataFiles(df, 1L, nBuckets)
-    publish(1L, 0L, adds.map { case (b, p) => s"add $b $p" },
-      s" buckets $nBuckets")
-    1L
+    DeltaLog.commitAppendPartitioned(root, bucketed(df, nBuckets), Seq("b"),
+      Some(-1L), Map(BucketsKey -> nBuckets.toString)) + 1
   }
 
   /** Copy-on-write CDC merge: apply `changes` — (key, `op` ∈
@@ -299,11 +207,10 @@ final class VersionedTable(
     * concurrent writer committed first.
     */
   def merge(changes: DataFrame, expectedVersion: Long): Long =
-    mergeImpl(changes, expectedVersion, "")
+    mergeImpl(changes, expectedVersion, None)
 
   private def mergeImpl(changes: DataFrame, expectedVersion: Long,
-      extraHeader: String): Long = {
-    val next = expectedVersion + 1
+      batchId: Option[Long]): Long = {
     val nB = bucketCountAt(expectedVersion)
     // schema enforcement: a change batch whose payload columns drift from
     // the table's would write bucket files with a different schema than
@@ -334,8 +241,7 @@ final class VersionedTable(
     // the copy-on-write pruning set: tiny (≤ nBuckets), driver-collected
     val touched = resolved.select(bucketOf(col(keyCol), nB).as("b"))
       .distinct().collect().map(_.getInt(0)).toSet
-    val live = liveFiles(expectedVersion)
-    val (oldTouched, carried) = live.partition { case (b, _) => touched(b) }
+    val oldTouched = liveFiles(expectedVersion).filter { case (b, _) => touched(b) }
     val payloadCols = resolved.columns.filter(c => c != keyCol && c != "op")
     val old =
       if (oldTouched.isEmpty) {
@@ -354,82 +260,60 @@ final class VersionedTable(
         col(keyCol) +: payloadCols.toIndexedSeq.map { c =>
           when(col("_op") === "upsert", col(s"_new_$c")).otherwise(col(c)).as(c)
         }: _*)
-    val adds = writeDataFiles(merged, next, nB)
-    val lines =
-      oldTouched.map { case (_, p) => s"remove $p" } ++
-        adds.map { case (b, p) => s"add $b $p" }
-    publish(next, expectedVersion, lines, extraHeader)
-    // carried files are untouched by construction; nothing to write
-    require(carried.forall { case (b, _) => !touched(b) })
-    next
+    commit(oldTouched, merged, expectedVersion, nB, batchId)
   }
+
+  /** Whether micro-batch `batchId` (or a later one) is already committed
+    * — the txn cursor [[appendBatch]] and [[mergeBatch]] share.
+    */
+  private def replayed(batchId: Long): Boolean =
+    DeltaLog.txnVersion(spark, root, BatchAppId).exists(_ >= batchId)
 
   /** IDEMPOTENT KEYED UPSERT for exactly-once streaming sinks — the
     * [[merge]] CDC semantics ((key, op ∈ upsert|delete, payload), delete
     * wins within a batch, copy-on-write of touched buckets only) committed
-    * as ONE version tagged with the micro-batch id, exactly like
-    * [[appendBatch]]: a redelivered batch (at-least-once upstream, retried
-    * foreachBatch, restarted query) is detected from the committed
-    * manifest tag and is a no-op, so at-least-once delivery + idempotent
+    * as ONE version carrying the micro-batch id as a txn action, exactly
+    * like [[appendBatch]]: a redelivered batch (at-least-once upstream,
+    * retried foreachBatch, restarted query) is detected from the committed
+    * txn cursor and is a no-op, so at-least-once delivery + idempotent
     * keyed commit = exactly-once UPSERT table contents — the
     * `MERGE INTO` + txn-version idiom, where [[appendBatch]] is the
     * append-only half. The table must already exist (init a base snapshot,
-    * possibly empty, first): the batch tag and the merge must land in the
-    * SAME atomic commit, which init's untagged manifest cannot provide.
+    * possibly empty, first): the merge needs a version to base on.
     */
   def mergeBatch(changes: DataFrame, batchId: Long): Long = {
     val cur = currentVersion()
     require(cur >= 1,
       s"mergeBatch requires an initialized table (call init first): $root")
-    refreshBatchCache(cur) // see every commit on disk before deciding
-    if (batchId <= batchIdCache) return cur // replayed batch
-    val next = mergeImpl(changes, cur, s" batch $batchId")
-    synchronized {
-      batchIdCache = math.max(batchIdCache, batchId)
-      batchCacheUpTo = math.max(batchCacheUpTo, next)
-    }
-    next
-  }
-
-  /** Buckets whose live file set changed anywhere in versions (vA, vB]:
-    * the union of every add's bucket and every removed path's bucket (the
-    * bucket is part of the path — `.../b=<n>`). Manifest-text work only.
-    */
-  private def touchedBetween(vA: Long, vB: Long): Set[Int] = {
-    val out = scala.collection.mutable.Set.empty[Int]
-    (vA + 1 to vB).foreach { i =>
-      Fs.readLines(manifestPath(i)).foreach { line =>
-        line.split(" ", 3) match {
-          case Array("add", b, _) => out += b.toInt
-          case Array("remove", p) =>
-            out += p.substring(p.lastIndexOf("b=") + 2).toInt
-          case _ =>
-        }
-      }
-    }
-    out.toSet
+    if (replayed(batchId)) cur
+    else mergeImpl(changes, cur, Some(batchId))
   }
 
   /** INCREMENTAL CDC READ — `table_changes(vA, vB)`: one row per key whose
     * value differs between snapshot vA and snapshot vB, typed
     * `change_type ∈ {insert, update, delete}` with the vB payload (vA
-    * payload for deletes). The diff is BUCKET-PRUNED: a bucket no commit
-    * in (vA, vB] touched carries the same immutable files in both
-    * snapshots and is never read — the cost scales with the data the
-    * change batches touched, not the table. The join itself co-partitions
-    * the two pruned snapshot fragments on the key. This is how a
-    * downstream incremental consumer (IVM refresh, replication, audit)
-    * subscribes to the table without rescanning it. vA = 0 means "since
-    * before the table existed" — every live vB row surfaces as an insert.
+    * payload for deletes). The diff is BUCKET-PRUNED: a bucket whose live
+    * files are the same in both snapshots carries the same immutable rows
+    * and is never read — the cost scales with the data the change batches
+    * touched, not the table. The join itself co-partitions the two pruned
+    * snapshot fragments on the key. This is how a downstream incremental
+    * consumer (IVM refresh, replication, audit) subscribes to the table
+    * without rescanning it. vA = 0 means "since before the table existed"
+    * — every live vB row surfaces as an insert.
     */
   def changes(vA: Long, vB: Long): DataFrame = {
     require(vA >= 0 && vA < vB && vB <= currentVersion(),
       s"need 0 <= vA < vB <= ${currentVersion()}, got ($vA, $vB)")
-    val touched = touchedBetween(vA, vB)
-    def pruned(v: Long): Seq[String] =
-      if (v == 0L) Seq.empty
-      else liveFiles(v).collect { case (b, p) if touched(b) => s"$root/$p" }
-    val (oldPaths, newPaths) = (pruned(vA), pruned(vB))
+    val before = if (vA == 0L) Seq.empty[(Int, String)] else liveFiles(vA)
+    val after = liveFiles(vB)
+    // every commit that changes a bucket replaces or extends its file set,
+    // so the buckets of the files live in exactly one snapshot are the
+    // touched ones
+    val (inA, inB) = (before.toSet, after.toSet)
+    val touched = (before.filterNot(inB) ++ after.filterNot(inA)).map(_._1).toSet
+    def pruned(files: Seq[(Int, String)]): Seq[String] =
+      files.collect { case (b, p) if touched(b) => s"$root/$p" }
+    val (oldPaths, newPaths) = (pruned(before), pruned(after))
     if (oldPaths.isEmpty && newPaths.isEmpty)
       return spark.emptyDataFrame
     val template = spark.read.parquet((oldPaths ++ newPaths): _*)
@@ -467,143 +351,60 @@ final class VersionedTable(
     * when its key volume outgrows the bucket count chosen at creation
     * (copy-on-write granularity, like Delta's OPTIMIZE repartition). The
     * snapshot's logical content is bit-for-bit unchanged — only the
-    * file layout moves — and the commit point is the same atomic
-    * put-if-absent race every writer goes through, so a concurrent merge
-    * and a rebucket cannot both land on the same version.
+    * file layout moves, and the new bucket count lands in the SAME commit
+    * — and the commit point is the same atomic put-if-absent race every
+    * writer goes through, so a concurrent merge and a rebucket cannot both
+    * land on the same version.
     */
-  def rebucket(newBuckets: Int, expectedVersion: Long): Long = {
-    val next = expectedVersion + 1
-    val live = liveFiles(expectedVersion)
-    val adds = writeDataFiles(read(expectedVersion), next, newBuckets)
-    publish(next, expectedVersion,
-      live.map { case (_, p) => s"remove $p" } ++
-        adds.map { case (b, p) => s"add $b $p" },
-      s" buckets $newBuckets")
-    next
-  }
-
-  /** Highest `batch` id any committed manifest carries, -1 if none. */
-  def lastCommittedBatchId(): Long =
-    (1L to currentVersion())
-      .flatMap(v => headerToken(v, "batch"))
-      .foldLeft(-1L)(math.max)
-
-  /** Incremental view of [[lastCommittedBatchId]] so a streaming sink's
-    * per-trigger replay check reads each manifest ONCE per instance
-    * lifetime instead of rescanning all of them per call (O(batches²)
-    * driver I/O over a stream's life). The log stays the source of truth:
-    * before every replay decision the cache is advanced through the
-    * CURRENT version, so commits made by OTHER instances since the last
-    * look are always seen first — a stale instance can conclude
-    * "replayed" only from manifests actually on disk, never from its own
-    * memory alone.
-    */
-  @volatile private var batchCacheUpTo: Long = 0L
-  @volatile private var batchIdCache: Long = -1L
-
-  private def refreshBatchCache(upTo: Long): Unit = synchronized {
-    if (upTo > batchCacheUpTo) {
-      val extra = (batchCacheUpTo + 1L to upTo).flatMap(v => headerToken(v, "batch"))
-      if (extra.nonEmpty) batchIdCache = math.max(batchIdCache, extra.max)
-      batchCacheUpTo = upTo
-    }
-  }
+  def rebucket(newBuckets: Int, expectedVersion: Long): Long =
+    commit(liveFiles(expectedVersion), read(expectedVersion),
+      expectedVersion, newBuckets)
 
   /** IDEMPOTENT APPEND for exactly-once streaming sinks: commit `df` as a
-    * pure-add version tagged with the micro-batch id. Structured
-    * Streaming's `foreachBatch` re-delivers a batch after a failure with
-    * the SAME `batchId`; because the tag rides in the committed manifest,
-    * a replayed batch is detected from the log itself and the append is a
-    * no-op — at-least-once delivery + idempotent commit = exactly-once
-    * table contents, the Delta streaming-sink txn-version idiom. Batch ids
-    * must arrive non-decreasing (Structured Streaming's contract for one
-    * query); a racing duplicate that loses the manifest publish throws and
-    * is ignored on its own retry.
+    * pure-add version carrying the micro-batch id as a txn action
+    * ([[DeltaLog.commitAppendIdempotent]]). Structured Streaming's
+    * `foreachBatch` re-delivers a batch after a failure with the SAME
+    * `batchId`; because the id rides in the committed log, a replayed
+    * batch is detected from the log itself and the append is a no-op —
+    * at-least-once delivery + idempotent commit = exactly-once table
+    * contents, the Delta streaming-sink txn-version idiom. Batch ids must
+    * arrive non-decreasing (Structured Streaming's contract for one
+    * query); a racing duplicate that loses the publish throws and is
+    * ignored on its own retry. Creates the table on first use.
     */
   def appendBatch(df: DataFrame, batchId: Long): Long = {
     val cur = currentVersion()
-    refreshBatchCache(cur) // see every commit on disk before deciding
-    if (batchId <= batchIdCache) return cur // replayed batch
-    val next = cur + 1
-    val nB = bucketCountAt(cur)
-    val adds = writeDataFiles(df, next, nB)
-    // a lost publish race needs no cache invalidation: the cache reflects
-    // only scanned manifests, and the retry re-reads currentVersion and
-    // refreshes through the winner's commit first
-    publish(next, cur, adds.map { case (b, p) => s"add $b $p" },
-      s" buckets $nB batch $batchId")
-    synchronized {
-      batchIdCache = math.max(batchIdCache, batchId)
-      batchCacheUpTo = math.max(batchCacheUpTo, next)
-    }
-    next
+    val nB = if (cur == 0L) nBuckets else bucketCountAt(cur)
+    DeltaLog.commitAppendIdempotent(spark, root, bucketed(df, nB),
+      BatchAppId, batchId, Seq("b"), Map(BucketsKey -> nB.toString),
+      Some(cur - 1)) + 1
   }
 
-  /** NAMED TAG — pin a human-readable name to a version (the git-tag /
-    * Iceberg-ref idiom: "the snapshot the Q3 model trained on"). Tags are
-    * immutable once created (put-if-absent, same discipline as commits).
-    */
-  def tag(name: String, version: Long): Unit = {
-    require(version >= 1 && version <= currentVersion(),
-      s"cannot tag version $version of [1, ${currentVersion()}]")
-    require(name.matches("[A-Za-z0-9._-]+"), s"illegal tag name '$name'")
-    val dir = Fs.resolve(logDir, "tags")
-    Fs.mkdirs(dir)
-    try Fs.createNew(Fs.resolve(dir, name), s"$version\n".getBytes("UTF-8"))
-    catch {
-      case _: org.apache.hadoop.fs.FileAlreadyExistsException =>
-        throw new IllegalStateException(
-          s"tag '$name' already exists (tags are immutable; pick a new name)")
-    }
-  }
-
-  /** Resolve a tag to its pinned version. */
-  def tagVersion(name: String): Long = {
-    val p = Fs.resolve(Fs.resolve(logDir, "tags"), name)
-    require(Fs.exists(p), s"no such tag '$name'")
-    Fs.readLines(p).head.trim.toLong
-  }
-
-  /** Read the snapshot a tag pins — `read(tagVersion(name))`. */
-  def readTag(name: String): DataFrame = read(tagVersion(name))
-
-  /** GARBAGE COLLECTION with a retention horizon: delete (a) ORPHAN data
-    * directories no manifest references (losers of the publish race — the
-    * commit protocol guarantees they are invisible, vacuum reclaims their
-    * bytes) and (b) data files referenced ONLY by versions below
-    * `retainFrom` (removed at or before it and never re-added). Time
-    * travel to versions >= `retainFrom` is untouched; reads below the
-    * horizon may fail — the retention contract every lakehouse vacuum
-    * carries. Manifests are kept (history is text-sized); only data
-    * bytes are reclaimed. Returns the deleted directory count.
+  /** GARBAGE COLLECTION with a retention horizon ([[DeltaLog.vacuum]]):
+    * delete (a) ORPHAN commit directories no log action references
+    * (losers of the publish race — the commit protocol guarantees they
+    * are invisible, vacuum reclaims their bytes) and (b) data files live
+    * ONLY in versions below `retainFrom`. Time travel to versions >=
+    * `retainFrom` is untouched; reads below the horizon may fail — the
+    * retention contract every lakehouse vacuum carries. The log is kept
+    * (history is text-sized); only data bytes are reclaimed. Returns the
+    * deleted path count.
     */
   def vacuum(retainFrom: Long): Int = {
     val cur = currentVersion()
     require(retainFrom >= 1 && retainFrom <= cur,
       s"retainFrom $retainFrom out of range [1, $cur]")
-    // every path any manifest in [retainFrom, cur] leaves LIVE at that
-    // version, plus everything added after the horizon: the keep set
-    val keep = scala.collection.mutable.Set.empty[String]
-    (retainFrom to cur).foreach { v =>
-      liveFiles(v).foreach { case (_, p) => keep += p }
-    }
-    val dataRoot = Fs.resolve(root, "data")
-    if (!Fs.isDir(dataRoot)) return 0
-    // bucket dirs on disk: data/c*/b=*; delete those not in the keep set
-    var deleted = 0
-    Fs.list(dataRoot).foreach { cdir =>
-      Fs.list(cdir).filter(b => Fs.name(b).startsWith("b=")).foreach { b =>
-        val rel = s"data/${Fs.name(cdir)}/${Fs.name(b)}"
-        if (!keep(rel)) {
-          Fs.deleteRecursive(b)
-          deleted += 1
-        }
-      }
-      // a commit dir with no bucket data left is itself reclaimed (stray
-      // write markers like _SUCCESS go with it)
-      if (!Fs.list(cdir).exists(p => Fs.name(p).startsWith("b=")))
-        Fs.deleteRecursive(cdir)
-    }
-    deleted
+    DeltaLog.vacuum(spark, root, retainFrom - 1).size
   }
+}
+
+object VersionedTable {
+
+  /** The metaData configuration entry holding the table's bucket count. */
+  private[graft] val BucketsKey = "graft.versionedTable.buckets"
+
+  /** The txn appId under which [[VersionedTable.appendBatch]] and
+    * [[VersionedTable.mergeBatch]] record their micro-batch ids.
+    */
+  val BatchAppId = "graft.versionedTable.batch"
 }

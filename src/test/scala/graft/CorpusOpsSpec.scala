@@ -176,6 +176,39 @@ class CorpusOpsSpec extends SparkTestBase {
     assert(topk.select(col("query_id")).distinct().count() >= 100L)
   }
 
+  test("q253 fleet never trusts stale maxscore metadata: after appendLexStore " +
+      "it equals the store-off path") {
+    CorpusOps.writeLexStore(spark, sfDir)
+    val store = CorpusOps.lexStorePathFor(sfDir)
+    val offset = 1000000000L
+    def fleet(): Seq[org.apache.spark.sql.Row] =
+      CorpusOps.q253WandBatch(spark, sfDir).collect().toSeq
+    try {
+      // a batch whose one made-up term out-counts every real term: once
+      // the impact metadata has counted it and the batch is erased again,
+      // the store's postings equal the corpus once more but its maxscore
+      // table still ranks a term no document holds
+      val n = Tables(spark, sfDir, "documents").count()
+      CorpusOps.appendLexStore(spark.range(n + 1).select(
+        (col("id") + lit(offset)).as("doc_id"), lit("zzqstale").as("text")), store)
+      CorpusOps.refreshMaxScores(spark, store)
+      graft.table.StoreMaint.eraseWhere(spark, s"$store/dl", Seq.empty,
+        col("doc_id") >= offset)
+      graft.table.StoreMaint.eraseWhere(spark, s"$store/postings", Seq("pbkt"),
+        col("doc_id") >= offset)
+      assert(!graft.table.StoreManifest.partFresh(store, "maxscore", "postings"),
+        "the fixture must leave maxscore older than postings")
+      val served = fleet()
+      CorpusOps.lexStoreEnabled = false
+      val cold = try fleet() finally CorpusOps.lexStoreEnabled = true
+      val differing = served.diff(cold) ++ cold.diff(served)
+      assert(served.nonEmpty)
+      assert(differing.size == 0,
+        s"a stale-maxscore store must serve exactly the store-off fleet, " +
+          s"e.g. ${differing.take(3)}")
+    } finally CorpusOps.writeLexStore(spark, sfDir)
+  }
+
   test("q257 fleet eval: per-query metrics are internally exact and match a " +
       "brute per-query recomputation") {
     val rows = CorpusOps.q257FleetEval(spark, sfDir).collect()

@@ -1215,9 +1215,10 @@ class PlanSpec extends SparkTestBase {
           s"fleet plan construction must submit no Spark jobs beyond store " +
             s"partition listings and fleet-hub materializations, saw: " +
             s"${pre.mkString(" // ")}")
-        assert(pre.count(_.startsWith("parquet at")) <= 6,
-          s"store listing jobs must stay table-count-sized, saw ${pre.length}")
-        assert(pre.length <= 24,
+        val listings = pre.count(_.startsWith("parquet at"))
+        assert(listings <= 6,
+          s"store listing jobs must stay table-count-sized, saw $listings")
+        assert(pre.length <= 12,
           s"construction jobs must stay fleet-constant (one hub build), " +
             s"saw ${pre.length}")
         built
@@ -1271,7 +1272,7 @@ class PlanSpec extends SparkTestBase {
           // THREE per build (queries hub, ranked-docs page, span page),
           // each a bounded-wave execution — a per-query driver step would
           // blow far past this
-          assert(pre.length <= 96,
+          assert(pre.length <= 64,
             s"$name construction jobs must stay fleet-constant, " +
               s"saw ${pre.length}")
           built

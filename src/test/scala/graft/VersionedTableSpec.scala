@@ -2,8 +2,11 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.functions._
 
+import graft.sources.DeltaLog
 import graft.table.VersionedTable
 
 class VersionedTableSpec extends SparkTestBase {
@@ -21,6 +24,21 @@ class VersionedTableSpec extends SparkTestBase {
   private def snap(df: org.apache.spark.sql.DataFrame): Map[Long, String] =
     df.select(col("doc_id"), col("text")).collect()
       .map(r => r.getLong(0) -> r.getString(1)).toMap
+
+  /** The (adds, removes) of table version `v`'s Delta commit (table
+    * version v is Delta version v - 1), each as (bucket, relative path).
+    */
+  private def commitActions(root: String, v: Long)
+      : (Seq[(Int, String)], Seq[(Int, String)]) = {
+    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+    val nodes = Files.readAllLines(Paths.get(root, "_delta_log", f"${v - 1}%020d.json"))
+      .asScala.toSeq.filter(_.nonEmpty).map(l => mapper.readTree(l))
+    def of(kind: String) = nodes.filter(_.has(kind)).map { n =>
+      val p = n.get(kind).get("path").asText()
+      (p.split("/b=")(1).takeWhile(_ != '/').toInt, p)
+    }
+    (of("add"), of("remove"))
+  }
 
   test("init + merge chain: every pinned version reconstructs its exact snapshot") {
     val t = new VersionedTable(spark, freshRoot("chain"), "doc_id")
@@ -68,13 +86,11 @@ class VersionedTableSpec extends SparkTestBase {
       .select(col("doc_id"), lit("upsert").as("op"),
         lit("rewritten").as("text"), col("lang"))
     t.merge(oneKey, 1L)
-    val m2 = Files.readAllLines(Paths.get(root, "_log", "v00000002.manifest"))
-    val adds = m2.toArray.map(_.toString).count(_.startsWith("add "))
-    val removes = m2.toArray.map(_.toString).count(_.startsWith("remove "))
-    assert(adds == 1 && removes == 1,
-      s"one touched bucket ⇒ 1 add + 1 remove, got $adds/$removes: $m2")
+    val (adds, removes) = commitActions(root, 2L)
+    assert(adds.size == 1 && removes.size == 1,
+      s"one touched bucket ⇒ 1 add + 1 remove, got $adds / $removes")
     // v1's untouched files still back the v2 snapshot (carried by reference,
-    // zero bytes moved): all but one of v2's live dirs live under data/c1
+    // zero bytes moved): all but one of v2's live files are v1's
     val live2 = t.read(2L)
     assert(live2.filter(col("text") === "rewritten").count() == 1L)
     assert(live2.count() == docs.count())
@@ -202,18 +218,12 @@ class VersionedTableSpec extends SparkTestBase {
     assert(snap(t.read(v5)) == before, "compaction must move bytes and nothing else")
     assert(snap(t.read(v4)) == before, "pre-compaction time travel must survive")
     assert(t.compact(v5) == v5, "idempotent: nothing fragmented, no new commit")
-    // BUCKET-PRUNED: the compaction manifest may only touch the fragmented
-    // buckets — no remove (or add) line for the single-dir buckets 8-15
-    val manifest = java.nio.file.Files
-      .readAllLines(Paths.get(rootP, "_log", f"v$v5%08d.manifest"))
-    manifest.forEach { line =>
-      val touched = line.split(" ") match {
-        case Array("add", b, _) => Some(b.toInt)
-        case Array("remove", p) => Some(p.split("/b=")(1).toInt)
-        case _ => None
-      }
-      touched.foreach(b =>
-        assert(b < 8, s"untouched bucket $b must carry over by reference: $line"))
+    // BUCKET-PRUNED: the compaction commit may only touch the fragmented
+    // buckets — no remove (or add) action for the single-file buckets 8-15
+    val (adds, removes) = commitActions(rootP, v5)
+    assert(adds.nonEmpty && removes.nonEmpty)
+    (adds ++ removes).foreach { case (b, p) =>
+      assert(b < 8, s"untouched bucket $b must carry over by reference: $p")
     }
   }
 
@@ -227,34 +237,34 @@ class VersionedTableSpec extends SparkTestBase {
     assert(snap(t.read(2L)) == s1, "rebucket preserves logical content")
     assert(snap(t.read(1L)) == s1, "pinned pre-rebucket read still works")
     // the new layout has at most 4 bucket files live
-    val m2 = Files.readAllLines(Paths.get(root, "_log", "v00000002.manifest"))
-    val adds2 = m2.toArray.map(_.toString).filter(_.startsWith("add "))
+    val (adds2, _) = commitActions(root, 2L)
     assert(adds2.length <= 4 && adds2.nonEmpty)
     // a one-key merge after rebucket rewrites ONE of the new buckets
     val oneKey = docs.orderBy(col("doc_id")).limit(1)
       .select(col("doc_id"), lit("upsert").as("op"),
         lit("rewritten").as("text"), col("lang"))
     t.merge(oneKey, 2L)
-    val m3 = Files.readAllLines(Paths.get(root, "_log", "v00000003.manifest"))
-    val adds3 = m3.toArray.map(_.toString).count(_.startsWith("add "))
-    val removes3 = m3.toArray.map(_.toString).count(_.startsWith("remove "))
+    val (a3, r3) = commitActions(root, 3L)
+    val (adds3, removes3) = (a3.size, r3.size)
     assert(adds3 == 1 && removes3 == 1,
       s"merge after rebucket touches one 4-way bucket, got $adds3/$removes3")
     assert(t.read(3L).filter(col("text") === "rewritten").count() == 1L)
   }
 
   test("appendBatch is idempotent on micro-batch replay (exactly-once sink)") {
-    val t = new VersionedTable(spark, freshRoot("append"), "doc_id")
+    val root = freshRoot("append")
+    val t = new VersionedTable(spark, root, "doc_id")
     val part = (i: Int) => docs.filter(pmod(col("doc_id"), lit(3)) === i % 3).limit(50)
     val v1 = t.appendBatch(part(0), batchId = 0L)
-    assert(v1 == 1L && t.lastCommittedBatchId() == 0L)
+    assert(v1 == 1L &&
+      DeltaLog.txnVersion(spark, root, VersionedTable.BatchAppId).contains(0L))
     val n1 = t.readLatest().count()
     val v2 = t.appendBatch(part(1), batchId = 1L)
     assert(v2 == 2L)
     val n2 = t.readLatest().count()
     assert(n2 > n1)
     // failure replay: foreachBatch re-delivers batch 1 with the same id —
-    // the committed manifest tag makes the re-append a no-op
+    // the committed txn action makes the re-append a no-op
     val vReplay = t.appendBatch(part(1), batchId = 1L)
     assert(vReplay == 2L, "replayed batch must not commit a new version")
     assert(t.currentVersion() == 2L)
@@ -264,14 +274,16 @@ class VersionedTableSpec extends SparkTestBase {
   }
 
   test("mergeBatch: replayed batch is a no-op; out-of-order keyed updates converge") {
-    val t = new VersionedTable(spark, freshRoot("mergebatch"), "doc_id")
+    val root = freshRoot("mergebatch")
+    val t = new VersionedTable(spark, root, "doc_id")
     t.init(docs.limit(60))
     def ch(rows: Seq[(Long, String, String, String)]) =
       spark.createDataFrame(rows).toDF("doc_id", "op", "text", "lang")
     // batch 0: upserts for keys in one order
     val v1 = t.mergeBatch(ch(Seq((1L, "upsert", "one-v1", "en"),
       (2L, "upsert", "two-v1", "en"))), batchId = 0L)
-    assert(v1 == 2L && t.lastCommittedBatchId() == 0L)
+    assert(v1 == 2L &&
+      DeltaLog.txnVersion(spark, root, VersionedTable.BatchAppId).contains(0L))
     val s1 = snap(t.readLatest())
     // failure replay: same batch id re-delivered — detected no-op, same
     // version, same content
@@ -306,8 +318,9 @@ class VersionedTableSpec extends SparkTestBase {
       t.merge(mkBatch(" loser"), 1L)
     }
     t.merge(mkBatch(" b"), 2L)
-    val dataDirs = (f: String) => Option(new java.io.File(s"$f/data").listFiles())
-      .getOrElse(Array.empty).count(_.isDirectory)
+    // data directories: one per commit attempt, beside _delta_log
+    val dataDirs = (f: String) => Option(new java.io.File(f).listFiles())
+      .getOrElse(Array.empty).count(d => d.isDirectory && d.getName != "_delta_log")
     val before = dataDirs(root)
     val s2 = snap(t.read(2L))
     val s3 = snap(t.read(3L))
@@ -320,23 +333,14 @@ class VersionedTableSpec extends SparkTestBase {
     assert(snap(t.readLatest()) == s3)
   }
 
-  test("tags pin versions immutably; merges reject schema-drifting batches") {
-    val t = new VersionedTable(spark, freshRoot("tags"), "doc_id")
+  test("merges reject schema-drifting batches") {
+    val t = new VersionedTable(spark, freshRoot("schema"), "doc_id")
     t.init(docs.limit(50))
     val b = docs.limit(50).filter(pmod(col("doc_id"), lit(2)) === 0)
       .select(col("doc_id"), lit("upsert").as("op"),
         concat(col("text"), lit(" v2")).as("text"), col("lang"))
     t.merge(b, 1L)
-    t.tag("q3-training-set", 1L)
-    val s1 = snap(t.read(1L))
-    assert(snap(t.readTag("q3-training-set")) == s1)
-    assert(t.tagVersion("q3-training-set") == 1L)
-    // tags are immutable
-    intercept[IllegalStateException] { t.tag("q3-training-set", 2L) }
-    assert(t.tagVersion("q3-training-set") == 1L, "failed re-tag must not move the pin")
-    // a later commit does not disturb the tag
     t.merge(b, 2L)
-    assert(snap(t.readTag("q3-training-set")) == s1)
     // schema enforcement: a drifting batch fails loudly at the merge
     val drifting = docs.limit(10)
       .select(col("doc_id"), lit("upsert").as("op"),
@@ -348,6 +352,39 @@ class VersionedTableSpec extends SparkTestBase {
     intercept[IllegalArgumentException] { t.merge(missing, 3L) }
     // the table is untouched by the rejected merges
     assert(t.currentVersion() == 3L)
+  }
+
+  test("a versioned table is a Delta table: DeltaLog reads every version " +
+      "of the q192 chain; the txn cursor is the last appended batch") {
+    val root = freshRoot("interop")
+    val t = new VersionedTable(spark, root, "doc_id")
+    def batch(delMod: Int, upMod: Int, suffix: String) = docs
+      .filter(pmod(col("doc_id"), lit(upMod)) === 0 ||
+        pmod(col("doc_id"), lit(delMod)) === 0)
+      .select(col("doc_id"),
+        when(pmod(col("doc_id"), lit(delMod)) === 0, "delete")
+          .otherwise("upsert").as("op"),
+        concat(col("text"), lit(suffix)).as("text"), col("lang"))
+    val v1 = t.init(docs.filter(pmod(col("doc_id"), lit(3)) =!= 0))
+    val v2 = t.merge(batch(7, 4, " v2"), v1)
+    val v3 = t.merge(batch(9, 5, " v3"), v2)
+    val v4 = t.merge(docs.filter(pmod(col("doc_id"), lit(6)) === 0)
+      .select(col("doc_id"), lit("upsert").as("op"),
+        concat(col("text"), lit(" v4")).as("text"), col("lang")), v3)
+    val fresh = (off: Long) => docs.filter(pmod(col("doc_id"), lit(3)) === 0)
+      .select((col("doc_id") + lit(off)).as("doc_id"), col("text"), col("lang"))
+    t.appendBatch(fresh(1000000L), batchId = 4L)
+    val v6 = t.appendBatch(fresh(2000000L), batchId = 5L)
+    assert(v4 == 4L && v6 == 6L && t.currentVersion() == 6L)
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select(col("doc_id"), col("text"), col("lang")).collect()
+        .map(r => (r.getLong(0), r.getString(1), r.getString(2))).sortBy(_._1).toSeq
+    (1L to v6).foreach { v =>
+      val viaDelta = DeltaLog.read(spark, root, Some(v - 1))
+      assert(viaDelta.columns.contains("b"), "the key bucket is the partition column")
+      assert(rows(viaDelta.drop("b")) == rows(t.read(v)), s"version $v")
+    }
+    assert(DeltaLog.txnVersion(spark, root, VersionedTable.BatchAppId).contains(5L))
   }
 
   test("delete wins over upsert for the same key within one batch") {
